@@ -12,10 +12,9 @@ skip_stages orchestrator, ``orchestrator.py:89-257`` / ``utils/metrics.py``):
   row counts and throughput — the per-partition lineage the north rule asks
   for.
 
-Storage is parquet-directory-based. On a production cluster the same calls
-target Iceberg tables (``writeTo(...).using("iceberg")``); the runtime here
-has no Iceberg jar, so the ``sources.catalog`` layer keeps the same
-write-once/marker discipline over plain parquet.
+Storage is parquet-directory-based: ``_Checkpointer`` writes each stage
+once and commits it with its marker. On a production cluster the same
+calls would target Iceberg tables (``writeTo(...).using("iceberg")``).
 """
 
 from __future__ import annotations

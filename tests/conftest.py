@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 
@@ -15,7 +17,10 @@ def pytest_configure(config):
 def spark():
     from company_name_matching_spark.session import get_spark
 
-    s = get_spark(app_name="pytest", cpus=8, shuffle_partitions=8)
+    # one slot per core the runner grants (SPARK_GRAFT_CPUS); the shuffle
+    # width stays fixed so plans do not depend on the host
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark(app_name="pytest", cpus=cpus, shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -89,9 +89,8 @@ def test_minhash_arrow_kernel_bit_identical(spark):
     """The Arrow signature kernel is BIT-identical to the JVM HOF form —
     same trigram hashes in, same universal-hash integer arithmetic — on a
     corpus covering Vietnamese unicode, short/empty-ish strings, and long
-    repetitive text; and minhash_pairs produces the identical pair set
-    under both kernels (it must: identical signatures ⇒ identical bands ⇒
-    identical candidates ⇒ same exact-Jaccard verify)."""
+    repetitive text; and minhash_pairs, which runs the Arrow kernel, finds
+    the case/whitespace near-dup."""
     from company_name_matching_spark.operators import blocking
 
     texts = [
@@ -125,17 +124,11 @@ def test_minhash_arrow_kernel_bit_identical(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    p_arrow = {
-        (r["left_id"], r["right_id"], r["jaccard"])
-        for r in dedup.minhash_pairs(docs, threshold=0.5, kernel="arrow").collect()
+    pairs = {
+        (r["left_id"], r["right_id"])
+        for r in dedup.minhash_pairs(docs, threshold=0.5).collect()
     }
-    p_jvm = {
-        (r["left_id"], r["right_id"], r["jaccard"])
-        for r in dedup.minhash_pairs(docs, threshold=0.5, kernel="jvm").collect()
-    }
-    assert p_arrow == p_jvm and (0, 1) in {(a, b) for a, b, _ in p_arrow}
-    with pytest.raises(ValueError):
-        dedup.minhash_pairs(docs, kernel="simd")
+    assert (0, 1) in pairs
 
 
 def test_multimodal_resize_and_frame_sampling(spark):

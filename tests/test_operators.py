@@ -37,6 +37,34 @@ def test_normalize_entity_type_native_matches_pandas(spark):
     assert got == [w if w is not None else None for w in want]
 
 
+def test_normalize_plan_evaluates_kernel_once(spark):
+    """One normalize path: the optimized plan holds exactly one
+    ArrowEvalPython node and no Union, both for the pipeline's
+    normalize_pages and for normalize_mentions with an id_domain as
+    search_topk calls it — also under a downstream filter on a
+    kernel-derived column, which a deterministic UDF would get cloned
+    below."""
+    import re
+
+    pages = fixtures.pages_dataframe(spark, n_companies=5, per_company=2)
+    corpus = spark.createDataFrame(
+        [("A", "CÔNG TY TNHH SAO MAI")], "company_id string, name string"
+    )
+    plans = {
+        "pages": normalize.normalize_pages(pages),
+        "mentions": normalize.normalize_mentions(
+            corpus, "company_id", "name", id_domain="c:"
+        ),
+        "filtered": normalize.normalize_pages(pages).where(
+            F.col("norm_key") != "x"
+        ),
+    }
+    for label, df in plans.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, label
+        assert not re.search(r"\bUnion\b", plan), label
+
+
 def test_dedup_exact_keeps_longest(spark):
     import datetime as dt
 
@@ -538,6 +566,7 @@ def test_winnow_fingerprints_match_reference_impl(spark):
         "completely unrelated text about spark shuffles",
         "ab",  # shorter than one gram: single truncated gram, 1 fp
         "\tthe quick  brown fox jumps over the lazy dog \n",
+        " \t ",  # blank: EMPTY set, not one gram of the empty string
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
@@ -547,7 +576,7 @@ def test_winnow_fingerprints_match_reference_impl(spark):
         for r in textstats.winnow_fingerprint_table(df).collect()
     }
     for i, t in enumerate(texts):
-        assert got[i] == py_winnow(t), i
+        assert got[i] == (py_winnow(t) if t.strip() else []), i
     # tab/newline padding and internal whitespace runs canonicalize exactly
     # like the python reference (strip + collapse): doc 4 is doc 0 with
     # padding and a doubled space -> identical fingerprint sets
@@ -557,77 +586,13 @@ def test_winnow_fingerprints_match_reference_impl(spark):
     assert not set(got[0]) & set(got[2])
 
 
-def test_winnow_xxhash64_path_structural_parity(spark):
-    """The fast production gram hash (hash="xxhash64", VERDICT r5 #2) must
-    drive the SAME selection structure as the oracle md5 path: applying
-    the python Schleimer'03 window-min selection to the engine-produced
-    xxhash64 gram arrays reproduces the full pipeline's fingerprints, the
-    shared-substring guarantee holds, and the near-dup PAIRS found on a
-    separated corpus agree with the md5 path."""
-    from pyspark.sql import functions as F
-
-    from company_name_matching_spark.functions import textstats
-    from company_name_matching_spark.operators import dedup
-
-    texts = [
-        "the quick brown fox jumps over the lazy dog near the river",
-        "the quick brown fox jumps over the lazy dog near the rivers",
-        "completely unrelated text about spark shuffle internals",
-        "ab",
-        "",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
-    )
-    w = 4
-    # engine gram hashes (staged canon, xxhash64 per k-gram)
-    grams = {
-        r["doc_id"]: list(r["gh"])
-        for r in df.select(
-            "doc_id",
-            textstats.winnow_gram_hashes(
-                textstats.canon_text(F.col("text")), 8, "xxhash64"
-            ).alias("gh"),
-        ).collect()
-    }
-
-    def py_select(hs):  # hash-agnostic Schleimer'03 window-min selection
-        if not hs:
-            return []
-        nw = max(len(hs) - w + 1, 1)
-        return sorted({min(hs[i:i + w]) for i in range(nw)})
-
-    got = {
-        r["doc_id"]: list(r["fp"])
-        for r in textstats.winnow_fingerprint_table(
-            df, hash="xxhash64").collect()
-    }
-    for i in range(len(texts)):
-        assert got[i] == py_select(grams[i]), i
-    assert set(got[0]) & set(got[1])          # shared-substring guarantee
-    assert not set(got[0]) & set(got[2])
-    assert got[4] == []                       # blank doc -> empty set
-    # pair agreement between hash paths on a clearly-separated corpus
-    md5_pairs = {(r["left_id"], r["right_id"])
-                 for r in dedup.winnow_pairs(
-                     df, threshold=0.5, hash="md5").collect()}
-    xx_pairs = {(r["left_id"], r["right_id"])
-                for r in dedup.winnow_pairs(df, threshold=0.5).collect()}
-    assert md5_pairs == xx_pairs == {(0, 1)}
-    # unknown hash fails loudly
-    import pytest
-
-    with pytest.raises(ValueError, match="winnow gram hash"):
-        textstats.winnow_gram_hashes(F.col("text"), 8, "sha1")
-
-
 def test_winnow_arrow_kernel_parity(spark):
     """The vectorized Arrow winnow kernel (hash="arrow", the round-5
     production default) must be BIT-identical to a direct python
     implementation of the same uint64 Horner rolling hash + Schleimer'03
     selection, replicate every HOF-engine edge semantic (blank → empty,
     null → empty, len<k → one truncated gram, whitespace canon), and find
-    the identical near-dup pair set as the other engines."""
+    the identical near-dup pair set as the md5 engine."""
     import re
 
     from company_name_matching_spark.functions import textstats
@@ -681,13 +646,18 @@ def test_winnow_arrow_kernel_parity(spark):
     assert got[6] == [] and got[7] == []
     assert set(got[0]) & set(got[1])          # shared-substring guarantee
     assert not set(got[0]) & set(got[2])
-    # all three engines find the identical pair set
+    # both engines find the identical pair set
     psets = {
         h: {(r["left_id"], r["right_id"])
             for r in dedup.winnow_pairs(df, threshold=0.5, hash=h).collect()}
-        for h in ("md5", "xxhash64", "arrow")
+        for h in ("md5", "arrow")
     }
-    assert psets["md5"] == psets["xxhash64"] == psets["arrow"] == {(0, 1)}
+    assert psets["md5"] == psets["arrow"] == {(0, 1)}
+    # any other gram hash fails loudly
+    import pytest
+
+    with pytest.raises(ValueError, match="winnow gram hash"):
+        textstats.winnow_fingerprint_table(df, hash="xxhash64")
 
 
 def test_repetition_signals_hand_values(spark):
@@ -822,27 +792,3 @@ def test_unknown_channel_raises(spark):
         blocking.generate_blocks(
             names, blocking.BlockingConfig(channels=("prefix", "fonetic"))
         )
-
-
-def test_dedup_normalize_paths_identical(spark):
-    """The distinct-text contraction ('always') is bit-identical to the
-    per-row kernel ('never') — the kernel is a pure function of the text,
-    so only the plan changes. 'auto' picks contraction on this duplicated
-    corpus and must also match. (Default is 'never': the A/B in the
-    operator docstring measured the distinct shuffle costlier than the
-    kernel on short mention strings.)"""
-    pages = fixtures.pages_dataframe(spark, n_companies=20, per_company=3,
-                                     upsample=4)
-    outs = {}
-    for mode in ("never", "always", "auto"):
-        outs[mode] = sorted(
-            map(tuple, normalize.normalize_pages(pages, dedup_normalize=mode)
-                .select("record_id", "url", "name", "cleaned", "norm_key",
-                        "match_key", "entity_type", "has_repeat")
-                .collect())
-        )
-    assert outs["never"] == outs["always"] == outs["auto"]
-    import pytest
-
-    with pytest.raises(ValueError, match="dedup_normalize"):
-        normalize.normalize_pages(pages, dedup_normalize="sometimes")

@@ -107,127 +107,6 @@ def test_topk_deterministic_ties(spark):
     assert [r["candidate_id"] for r in out] == ["a", "b"]
 
 
-def test_create_table_ddl_and_quality_alerts(spark, tmp_path):
-    from company_name_matching_spark.plans import quality
-    from company_name_matching_spark.sources.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(str(tmp_path / "catddl"))
-    s = cat.create_table(spark, "t", "id BIGINT, name STRING")
-    assert s == 0
-    df = cat.read(spark, "t")
-    assert df.count() == 0 and df.columns == ["id", "name"]
-    # idempotent: second create is a no-op, table content untouched
-    assert cat.create_table(spark, "t", "other STRING") is None
-    assert cat.read(spark, "t").columns == ["id", "name"]
-
-    matches = spark.createDataFrame(
-        [(0.95, True), (0.91, True), (0.40, False), (0.80, True)],
-        "score double, is_match boolean",
-    )
-    m = quality.match_quality_metrics(matches)
-    assert m["n_pairs"] == 4 and abs(m["high_confidence_rate"] - 0.5) < 1e-9
-    assert quality.check_quality_alerts(m, {"avg_score": 0.5}) == []
-    alerts = quality.check_quality_alerts(
-        m, {"avg_score": 0.9, "high_confidence_rate": 0.7}
-    )
-    assert len(alerts) == 2 and all(a.startswith("ALERT") for a in alerts)
-
-
-def test_catalog_append_is_o_new_data(spark, tmp_path):
-    """Iceberg-shaped append contract: committing new rows writes ONLY new
-    data files — every pre-existing parquet file is byte-identical after the
-    append (the round-1 version rewrote the whole table per append)."""
-    import os
-
-    from company_name_matching_spark.sources.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(str(tmp_path / "cat2"))
-    big = spark.range(0, 1000).withColumnRenamed("id", "k")
-    cat.write("t", big)
-    before = {
-        str(p): (p.stat().st_size, p.stat().st_mtime_ns)
-        for p in (tmp_path / "cat2" / "t").rglob("*.parquet")
-    }
-    assert before
-    small = spark.range(1000, 1010).withColumnRenamed("id", "k")
-    s1 = cat.write("t", small, mode="append")
-    for path, sig in before.items():
-        st = os.stat(path)
-        assert (st.st_size, st.st_mtime_ns) == sig, f"rewritten: {path}"
-    assert cat.read(spark, "t").count() == 1010
-    assert cat.read(spark, "t", snapshot=s1 - 1).count() == 1000  # time travel
-    # merge-insert is O(new) too: only missing keys land in a new dir
-    upd = spark.range(1005, 1020).withColumnRenamed("id", "k")
-    cat.merge_insert_missing(spark, "t", upd, "k")
-    for path, sig in before.items():
-        st = os.stat(path)
-        assert (st.st_size, st.st_mtime_ns) == sig
-    assert cat.read(spark, "t").count() == 1020
-
-
-def test_catalog_lifecycle(spark, tmp_path):
-    from company_name_matching_spark.sources.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(str(tmp_path / "cat"))
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    s0 = cat.write("t", df1)
-    assert cat.read(spark, "t").count() == 2
-
-    # merge: insert only missing keys
-    upd = spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
-    cat.merge_insert_missing(spark, "t", upd, "id")
-    got = {r["id"]: r["v"] for r in cat.read(spark, "t").collect()}
-    assert got == {1: "a", 2: "b", 3: "c"}  # id 2 NOT overwritten
-
-    # time travel to the first snapshot
-    assert cat.read(spark, "t", snapshot=s0).count() == 2
-
-    # compact + expire
-    cat.compact(spark, "t", target_partitions=1, sort_by=["id"])
-    dropped = cat.expire_snapshots("t", keep_last=1)
-    assert len(dropped) >= 2
-    assert cat.read(spark, "t").count() == 3
-    with pytest.raises(Exception):
-        cat.read(spark, "t", snapshot=s0).count()
-
-
-def test_catalog_partitioned_append_inherits_spec(spark, tmp_path):
-    """Appends to a partitioned table must reuse the table's partition spec
-    (ADVICE r2): mixed hive-partitioned + flat data dirs under one snapshot
-    break partition-column discovery on read."""
-    from company_name_matching_spark.sources.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(str(tmp_path / "catp"))
-    df1 = spark.createDataFrame(
-        [(1, "x", "a"), (2, "y", "b")], "id long, v string, part string"
-    )
-    cat.write("t", df1, partition_by=["part"])
-    # plain append (no spec given) inherits hive partitioning
-    df2 = spark.createDataFrame([(3, "z", "a")], "id long, v string, part string")
-    cat.write("t", df2, mode="append")
-    got = cat.read(spark, "t")
-    assert set(got.columns) == {"id", "v", "part"}
-    assert got.count() == 3
-    assert got.where("part = 'a'").count() == 2
-    # merge-insert inherits too
-    upd = spark.createDataFrame(
-        [(3, "dup", "a"), (4, "w", "c")], "id long, v string, part string"
-    )
-    cat.merge_insert_missing(spark, "t", upd, "id")
-    got = cat.read(spark, "t")
-    assert got.count() == 4 and got.where("part = 'c'").count() == 1
-    # the new data dirs really are hive-partitioned on disk
-    dirs = sorted(p.name for p in (tmp_path / "catp" / "t").glob("data-*"))
-    assert len(dirs) == 3
-    for d in dirs:
-        assert list((tmp_path / "catp" / "t" / d).glob("part=*")), d
-    # an explicit conflicting spec is rejected
-    with pytest.raises(ValueError):
-        cat.write("t", df2, mode="append", partition_by=["v"])
-    with pytest.raises(ValueError):
-        cat.write("t", df2, mode="append", partition_by=[])
-
-
 def test_search_window_counts_expanded_entries(spark):
     """matcher.py:615-625 parity (ADVICE r2): the scanned/returned list is
     truncated at top_k EXPANDED entries — each near-duplicate original counts
@@ -431,85 +310,6 @@ def test_bm25_query_max_term_df_cap(spark):
     assert bm25.bm25_query_max(corpus, queries, max_term_df=0).count() == 0
 
 
-def test_catalog_partitioned_read_pins_written_schema(spark, tmp_path):
-    """Partition-column types must come from the write-time schema, not
-    per-root inference (ADVICE r4): a string partition value like '01' in
-    one append and '1a' in another would infer int vs string per root and
-    break (or silently widen) the union."""
-    from company_name_matching_spark.sources.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(str(tmp_path / "catsp"))
-    df1 = spark.createDataFrame([(1, "01")], "id long, part string")
-    cat.write("t", df1, partition_by=["part"])
-    df2 = spark.createDataFrame([(2, "1a")], "id long, part string")
-    cat.write("t", df2, mode="append")
-    got = cat.read(spark, "t")
-    assert dict(got.dtypes)["part"] == "string"
-    assert {(r["id"], r["part"]) for r in got.collect()} == {(1, "01"), (2, "1a")}
-    # time travel to the first snapshot keeps the written type too
-    first = cat.read(spark, "t", snapshot=0)
-    assert dict(first.dtypes)["part"] == "string"
-    assert first.collect()[0]["part"] == "01"
-
-
-def test_catalog_append_schema_mismatch_raises(spark, tmp_path):
-    """read() pins the manifest schema over every root, so a drifting
-    append would surface as SILENT null-fill/column loss — write() must
-    reject it loudly instead (r4 review)."""
-    from company_name_matching_spark.sources.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(str(tmp_path / "catsch"))
-    cat.write("t", spark.createDataFrame([(1, "a", "p")],
-                                         "id long, v string, part string"),
-              partition_by=["part"])
-    # missing column
-    with pytest.raises(ValueError, match="append schema"):
-        cat.write("t", spark.createDataFrame([(2, "p")], "id long, part string"),
-                  mode="append")
-    # changed type
-    with pytest.raises(ValueError, match="append schema"):
-        cat.write("t", spark.createDataFrame([("2", "b", "p")],
-                                             "id string, v string, part string"),
-                  mode="append")
-    # same names+types, different field order: fine (unionByName)
-    cat.write("t", spark.createDataFrame([("b", 2, "q")],
-                                         "v string, id long, part string"),
-              mode="append")
-    got = cat.read(spark, "t")
-    assert got.count() == 2 and set(got.columns) == {"id", "v", "part"}
-
-
-def test_catalog_legacy_append_checks_inferred_schema(spark, tmp_path):
-    """First append to a pre-schema_json (legacy) snapshot must infer the
-    existing roots' schema and run the SAME names+types gate — otherwise a
-    drifting legacy append commits the appender's schema as authoritative
-    and read() pins it, silently null-filling the old roots (ADVICE r5)."""
-    import json
-
-    from company_name_matching_spark.sources.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(str(tmp_path / "catleg"))
-    cat.write("t", spark.createDataFrame([(1, "a")], "id long, v string"))
-    # simulate a pre-r4 manifest: drop the persisted schema
-    meta_path = tmp_path / "catleg" / "t" / "_meta.json"
-    meta = json.loads(meta_path.read_text())
-    for s in meta["snapshots"]:
-        s.pop("schema_json", None)
-    meta_path.write_text(json.dumps(meta))
-    # drifting append (changed type) must fail loudly, not null-fill
-    with pytest.raises(ValueError, match="append schema"):
-        cat.write("t", spark.createDataFrame([("2", "b")],
-                                             "id string, v string"),
-                  mode="append")
-    # equivalent append passes, and the committed schema is the TABLE's
-    cat.write("t", spark.createDataFrame([(2, "b")], "id long, v string"),
-              mode="append")
-    got = cat.read(spark, "t")
-    assert got.count() == 2
-    assert [f.dataType.simpleString() for f in got.schema.fields
-            if f.name == "id"] == ["bigint"]
-
-
 def test_hybrid_dense_dim_mismatch_raises(spark):
     """An encoder whose output width differs from dense_dim would null-pad
     against the hyperplanes and silently collapse every record into one
@@ -535,31 +335,6 @@ def test_hybrid_dense_dim_mismatch_raises(spark):
             SearchConfig(model="hybrid_dense", dense_dim=64,
                          dense_encoder_factory=bad_factory),
         )
-
-
-def test_catalog_append_nullability_and_order_stability(spark, tmp_path):
-    """(r4 review) A parquet round-trip flips containsNull on array
-    columns — such appends must pass the schema check; and an accepted
-    field-order-differing append must NOT reorder read()'s columns (the
-    table schema stays authoritative)."""
-    from company_name_matching_spark.sources.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(str(tmp_path / "catnul"))
-    df = spark.createDataFrame([(1, "a b")], "id long, s string").selectExpr(
-        "id", "split(s, ' ') AS toks"  # containsNull=false in-memory
-    )
-    cat.write("t", df)
-    # round-trip through parquet: containsNull comes back true
-    df.write.parquet(str(tmp_path / "rt"))
-    back = spark.read.parquet(str(tmp_path / "rt"))
-    cat.write("t", back, mode="append")  # must NOT raise
-    assert cat.read(spark, "t").count() == 2
-    # order-differing append keeps the ORIGINAL column order on read
-    cat2 = ParquetCatalog(str(tmp_path / "catord"))
-    cat2.write("o", spark.createDataFrame([(1, "x")], "id long, v string"))
-    cat2.write("o", spark.createDataFrame([("y", 2)], "v string, id long"),
-               mode="append")
-    assert cat2.read(spark, "o").columns == ["id", "v"]
 
 
 def test_hybrid_dense_default_encoder_tracks_dense_dim(spark):

@@ -196,74 +196,3 @@ def test_pairs_sink_idempotent_under_replay(spark, tmp_path):
     assert again == first
     assert spark.read.parquet(sink).count() == 3  # no duplicate rows
     assert spark.read.parquet(f"{store}/names").count() == 3  # stores stable
-
-
-def test_windowed_counts_watermark_drops_late_rows(spark, tmp_path):
-    """streaming/windowed.py: event-time windows + watermark over a real
-    file-source stream, two availableNow runs sharing one checkpoint (the
-    resume path). Run 2's late row — older than the watermark persisted by
-    run 1 — must be DROPPED: closed windows are never reopened, and each
-    (window, lang) is emitted exactly once across both runs."""
-    import datetime as dt
-
-    from company_name_matching_spark.sources.fixtures import PAGES_SCHEMA
-    from company_name_matching_spark.streaming.windowed import (
-        windowed_page_counts,
-    )
-
-    src = tmp_path / "wsrc"
-    out = tmp_path / "wout"
-    ck = tmp_path / "wck"
-    t0 = dt.datetime(2026, 1, 1, 10, 0, 0)
-
-    def page(url, minutes, lang="vi"):
-        return (url, t0 + dt.timedelta(minutes=minutes), b"x",
-                f"text {url}", lang, "e", "k")
-
-    def run_batch(rows, subdir):
-        spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(src / subdir))
-        stream = spark.readStream.schema(PAGES_SCHEMA).option(
-            "maxFilesPerTrigger", 1000
-        ).parquet(str(src) + "/*")
-        q = (
-            windowed_page_counts(stream)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ck))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # run 1: three pages in [10:00,10:10), one at 10:59 pushing the
-    # watermark to 10:49 -> the 10:00 window closes and is emitted
-    run_batch(
-        [page("u1", 1), page("u2", 3), page("u2", 7), page("w1", 59)],
-        "b1",
-    )
-    first = spark.read.parquet(str(out)).collect()
-    got1 = {(r["window_start"], r["lang"]): (r["n_pages"], r["n_urls"])
-            for r in first}
-    assert got1 == {(t0, "vi"): (3, 2)}
-
-    # run 2: a LATE page at 10:02 (behind the persisted 10:49 watermark —
-    # must be dropped, the closed 10:00 window must NOT be re-emitted) +
-    # pages at 11:05/11:07 + one at 11:30 closing the 10:50 and 11:00
-    # windows
-    run_batch(
-        [page("late", 2), page("u3", 65), page("u4", 67), page("w2", 90)],
-        "b2",
-    )
-    rows = spark.read.parquet(str(out)).collect()
-    got = {(r["window_start"], r["lang"]): (r["n_pages"], r["n_urls"])
-           for r in rows}
-    # exactly-once: the 10:00 window still shows run-1 counts (late row
-    # dropped, no duplicate emission), and 10:50 + 11:00 are now closed
-    assert got[(t0, "vi")] == (3, 2)
-    assert got[(t0 + dt.timedelta(minutes=50), "vi")] == (1, 1)
-    assert got[(t0 + dt.timedelta(minutes=60), "vi")] == (2, 2)
-    # nothing else emitted (11:30 window still open)
-    assert len(got) == 3

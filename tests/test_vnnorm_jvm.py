@@ -1,13 +1,11 @@
 """Differential parity tests: JVM regexp normalize chain vs the pandas
-byte-parity kernel (functions/vnnorm_jvm.py vs functions/vnnorm.py).
+byte-parity kernel (tests/vnnorm_jvm.py vs functions/vnnorm.py).
 
 The JVM chain claims byte-identity ONLY inside the safe charset
 (SAFE_TEXT_PATTERN); these tests prove that claim on the goldens, on
-adversarial rule-boundary strings, on a seeded fuzz corpus built from
+adversarial rule-boundary strings and on a seeded fuzz corpus built from
 the same fragment vocabulary as the hypothesis fuzz suite, and prove the
-ROUTER sends every known-divergent character class to the pandas
-kernel. Finally: normalize_mentions(kernel="auto") must be row-for-row
-identical to kernel="pandas" on a mixed safe/unsafe corpus."""
+safe-charset check rejects every known-divergent character class."""
 
 from __future__ import annotations
 
@@ -16,11 +14,10 @@ import random
 from pathlib import Path
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from company_name_matching_spark.functions import vnnorm, vnnorm_jvm
-from company_name_matching_spark.operators import normalize
+from company_name_matching_spark.functions import vnnorm
+from tests import vnnorm_jvm
 
 _FRAGMENTS = [
     "công ty", "cty", "tnhh", "cp", "ctcp", "jsc", "co.,ltd", "co. ltd",
@@ -123,28 +120,3 @@ def test_router_flags_divergent_charsets_unsafe(spark):
                     vnnorm_jvm.is_jvm_safe(F.col("t")).alias("safe")).collect()
     for r in got:
         assert r["safe"] == r["want"], repr(r["t"])
-
-
-def test_normalize_mentions_auto_equals_pandas_on_mixed_corpus(spark):
-    texts = _fuzz_corpus(150, seed=11) + [
-        "Công\tty TNHH Tab",      # unsafe → pandas branch
-        "Café Ltd",          # unsafe (combining mark)
-        "İstanbul Holding JSC",    # unsafe (U+0130)
-        "Plain Safe Co., Ltd",     # safe
-    ]
-    rows = [(f"u{i}", t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "url string, text string")
-    a = normalize.normalize_mentions(df, "url", "text", kernel="pandas")
-    b = normalize.normalize_mentions(df, "url", "text", kernel="auto")
-    pa = a.toPandas().sort_values("record_id").reset_index(drop=True)
-    pb = b.toPandas().sort_values("record_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(pa, pb[pa.columns], check_exact=True)
-    # the unsafe rows actually flowed through (not silently dropped)
-    kept_urls = set(pb["source_id"])
-    assert {"u150", "u151", "u152", "u153"} <= kept_urls
-
-
-def test_normalize_mentions_rejects_unknown_kernel(spark):
-    df = spark.createDataFrame([("u", "t")], "url string, text string")
-    with pytest.raises(ValueError):
-        normalize.normalize_mentions(df, "url", "text", kernel="cuda")

@@ -1,27 +1,20 @@
-"""JVM-native twin of the vnnorm normalization kernel.
+"""JVM-native twin of the vnnorm normalization kernel — a test-only
+second statement of the spec.
 
 The pandas kernel (``functions/vnnorm.py``) is the byte-parity ground
-truth for the reference's normalization spec
-(``/root/reference/src/preprocess.py:4-217``). This module states the
-SAME ordered rule chain as chained
-``regexp_replace``/``translate``/``lower``/``trim`` Column expressions —
-zero Python workers, zero Arrow transfer.
+truth for the reference's normalization spec (``src/preprocess.py:4-217``)
+and the only kernel the engine runs. This module states the SAME ordered
+rule chain as chained ``regexp_replace``/``translate``/``lower``/``trim``
+Column expressions, so the differential suite (``test_vnnorm_jvm.py``)
+can check the kernel against an independent implementation.
 
-MEASURED OUTCOME (round 5, ``bench_normalize_kernel.json``): the JVM
-chain is SLOWER than the Arrow kernel — 18.5 s vs 12.1 s at local[8],
-30.8 vs 8.9 at local[32] on 217k pages (interleaved fresh-JVM
-best-of-2). The ~120-rule chain nested as one Column expression
-exceeds janino's 64 KB generated-method limit, so Spark falls back to
-interpreted evaluation: a per-row expression-tree walk that
-materializes a ``UTF8String → java.lang.String → UTF8String``
-round-trip per regexp_replace. One Arrow batch transfer into the
-vectorized pandas kernel is cheaper than ~120 JVM string
-materializations per row — and the gap widens with threads as the
-allocations saturate the memory bus. ``normalize_mentions`` therefore
-defaults to ``kernel="pandas"``; this module remains as (a) an
-executable second statement of the spec whose differential suite
-hardens the kernel, and (b) the only option for pure-SQL deployments
-that cannot run Python workers.
+It lives in the tests because it lost as a runtime kernel
+(``bench_normalize_kernel.json``: 18.5 s vs 12.1 s at local[8], 30.8 vs
+8.9 at local[32] on 217k pages). The ~120-rule chain nested as one
+Column expression exceeds janino's 64 KB generated-method limit, so
+Spark falls back to interpreted evaluation with a
+``UTF8String → java.lang.String → UTF8String`` round-trip per
+regexp_replace.
 
 Byte-parity scope — the SAFE charset
 ------------------------------------
@@ -46,15 +39,8 @@ composition — no combining marks, no singleton decompositions), the only
 whitespace character is the ASCII space (so Python ``\\s``/``str.strip``
 ≡ Java ``(?U)\\s``/``F.trim``), lowercase is 1:1 and locale-stable, and
 ``(?U)`` makes Java's ``\\b``/``\\w`` agree with Python's unicode word
-semantics. Everything outside the set routes to the pandas kernel
-(``normalize.normalize_mentions(kernel="auto")``) — correctness never
-depends on the whitelist being generous, only the JVM-fraction of the
-corpus does.
-
-Parity evidence: differential pytest over the golden corpus, the
-adversarial rule-boundary cases, the hypothesis fuzz generator, and the
-full 4,019-name reference corpus (tests/test_vnnorm_jvm.py) — byte
-equality on every safe string, router correctness on every unsafe one.
+semantics. The differential suite compares only strings inside the set
+and checks that ``is_jvm_safe`` rejects every known-divergent class.
 """
 
 from __future__ import annotations
