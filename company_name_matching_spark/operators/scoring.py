@@ -317,21 +317,25 @@ def build_idf(
 
     ``explode(array_distinct(...)) → groupBy(gram).count()`` is a bounded-
     cardinality aggregation (map-side partial agg + one small shuffle).
+    Each document also contributes one null sentinel gram, so the null
+    group's count is the document count N and one job computes both (no
+    real gram is null: keys are non-null strings).
     """
-    n_docs = names.count()
-    df_rows = (
-        names.select(
-            F.explode(
-                F.array_distinct(trigram_strings_col(F.col(string_col), n))
-            ).alias("gram")
-        )
+    grams = F.concat(
+        F.array_distinct(trigram_strings_col(F.col(string_col), n)),
+        F.array(F.lit(None).cast("string")),
+    )
+    doc_freq = {
+        row["gram"]: row["df"]
+        for row in names.select(F.explode(grams).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("df"))
         .collect()
-    )
+    }
+    n_docs = doc_freq.pop(None, 0)
     return {
-        row["gram"]: (gid, similarity.smooth_idf(row["df"], n_docs))
-        for gid, row in enumerate(sorted(df_rows, key=lambda r: r["gram"]))
+        gram: (gid, similarity.smooth_idf(doc_freq[gram], n_docs))
+        for gid, gram in enumerate(sorted(doc_freq))
     }
 
 
@@ -425,6 +429,11 @@ def score_pairs(
     match_key, tokens, entity_type, has_repeat — NOT pre-featurized);
     ``idf`` defaults to :func:`build_idf` over ``names``.
 
+    ``pairs`` is read twice (the distinct key-pair dedup and the final
+    assembly), so callers pass a stored table — the pipeline's ``pairs``
+    checkpoint, or search's ``search_cand`` barrier — never a lazy plan
+    that would re-run its blocking joins on each read.
+
     Three-tier plan (the dominant cost at scale is moving the TF-IDF
     vectors through the join and the Arrow boundary, not the kernels):
 
@@ -460,7 +469,9 @@ def score_pairs(
     # and re-deriving it costs one extra broadcast-join pass over the pair
     # list, strictly cheaper than the old write+read parquet barrier of the
     # full pair base (the in-memory cache alternative anti-scales, see
-    # sources/store).
+    # sources/store). That holds only because ``pairs`` is itself a stored
+    # table (see the docstring): a lazy ``pairs`` would re-run its whole
+    # plan on both reads.
     base = (
         pairs.join(l_light, pairs.left_id == l_light.l_record_id)
         .join(r_light, pairs.right_id == r_light.r_record_id)

@@ -251,6 +251,10 @@ def search_topk(
     search_scoring = dataclasses.replace(cfg.scoring, repeat_penalty=1.0)
     # corpus-side IDF, the reference's fit corpus
     idf = scoring.build_idf(c, n=search_scoring.ngram)
+    # score_pairs reads its pairs twice (key dedup, final assembly): left
+    # lazy, the query blocks, corpus block filter, join and dedup would run
+    # three times per call (its key_features barrier, twice in the collect)
+    cand = materialize(cand, "search_cand")
     scored = scoring.score_pairs(union_names, cand, idf, search_scoring)
 
     if cfg.model == "hybrid_bm25":

@@ -109,7 +109,9 @@ class _Checkpointer:
         if self.root and persist:
             out = self._dir(stage)
             df.write.mode("overwrite").parquet(str(out / "data"))
-            df = self.spark.read.parquet(str(out / "data"))
+            # written schema, not inferred: no schema-inference job (the
+            # resumed read() above has no schema at hand and infers)
+            df = self.spark.read.schema(df.schema).parquet(str(out / "data"))
         else:
             # no storage checkpoint → still materialize through parquet
             # scratch: the stage output is consumed by the metrics job AND

@@ -27,6 +27,8 @@ def get_spark(
     * shuffle partitions default to 2× cores locally (the reference's own
       partition sweep found 2–3× cores optimal); on a real cluster AQE
       coalesces from a higher initial number.
+    * codegen cache sized above the engine's generated-class set, so each
+      class compiles once per session.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(2 * cpus, 8)
@@ -42,6 +44,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # Spark's default 100-entry codegen cache is smaller than one search
+        # call: at 100 entries a warm search_topk call recompiled 167 classes
+        # and a warm run_pipeline 142 (CodegenMetrics compile count, local[4]).
+        # With room for all of them, one session compiled 190 classes over
+        # three search calls and 318 after three pipeline runs more, and a
+        # warm unit then compiled 2-12. Static conf: read at session start.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

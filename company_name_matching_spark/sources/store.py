@@ -12,8 +12,8 @@ Two reasons this is the engine-wide policy:
    (Iceberg/parquet) anyway — checkpoint/resume depends on it. Using the
    same mechanism for intra-run reuse keeps one code path.
 
-Temp outputs live under a per-session scratch dir and are removed when the
-SparkSession's JVM exits (they sit in java.io.tmpdir-style scratch space).
+Temp outputs live under a per-process scratch dir (tmpfs when there is
+one) and are removed when the Python process exits.
 """
 
 from __future__ import annotations
@@ -44,10 +44,16 @@ def _scratch_dir() -> str:
 
 
 def materialize(df: DataFrame, label: str = "stage") -> DataFrame:
-    """Hard materialization barrier: parquet write + read-back."""
+    """Hard materialization barrier: parquet write + read-back.
+
+    The read-back takes the written frame's schema instead of inferring it
+    from the files, which would cost one more Spark job per barrier. The
+    result is the same schema: file sources read every column as nullable,
+    as parquet inference does.
+    """
     path = f"{_scratch_dir()}/{label}-{next(_counter)}"
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def fanout_repartition(df: DataFrame) -> DataFrame:

@@ -187,6 +187,8 @@ class TestPipelineFrontStage:
             by_c = {}
             for r in rows:
                 by_c.setdefault(r.cluster_id, set()).add(r.record_id)
-            return sorted(frozenset(v) for v in by_c.values())
+            # a set, not sorted(): frozensets order only by subset, so a
+            # sorted list of disjoint clusters keeps the collect order
+            return {frozenset(v) for v in by_c.values()}
 
         assert cluster_sets(with_text) == cluster_sets(raw)

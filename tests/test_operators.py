@@ -792,3 +792,52 @@ def test_unknown_channel_raises(spark):
         blocking.generate_blocks(
             names, blocking.BlockingConfig(channels=("prefix", "fonetic"))
         )
+
+
+def test_build_idf_matches_python_reference(spark):
+    """build_idf counts documents inside its gram aggregation; the dict must
+    equal smooth_idf over per-document distinct grams computed in Python,
+    with keys that are empty, shorter than n and duplicated."""
+    from company_name_matching_spark.functions import similarity
+    from company_name_matching_spark.operators import scoring
+
+    keys = ["", "ab", "ab", "abcd", "x", "abcabc", "công ty", "công ty", "ty"]
+    names = spark.createDataFrame(
+        [(str(i), k) for i, k in enumerate(keys)], "id string, match_key string"
+    )
+    for n in (2, 3):
+        # the SQL gram definition: a key shorter than n (or empty) is its
+        # own single gram
+        docs = [{k[i:i + n] for i in range(max(len(k) - n + 1, 1))}
+                for k in keys]
+        df = {}
+        for grams in docs:
+            for g in grams:
+                df[g] = df.get(g, 0) + 1
+        want = {
+            g: (gid, similarity.smooth_idf(df[g], len(keys)))
+            for gid, g in enumerate(sorted(df))
+        }
+        assert scoring.build_idf(names, n=n) == want
+    assert scoring.build_idf(names.limit(0), n=3) == {}
+
+
+def test_materialize_schema_equals_inferred(spark):
+    """The barrier reads back with the written schema instead of inferring
+    it; the result must be the schema inference gives, nullability included."""
+    from pyspark.sql.types import (
+        ArrayType, FloatType, LongType, StringType, StructField, StructType,
+    )
+
+    from company_name_matching_spark.sources import store
+
+    schema = StructType([
+        StructField("id", LongType(), False),
+        StructField("s", StringType(), True),
+        StructField("a", ArrayType(FloatType(), False), False),
+    ])
+    df = spark.createDataFrame([(1, "x", [1.0]), (2, None, [])], schema)
+    out = store.materialize(df, "schema_check")
+    inferred = spark.read.parquet(out.inputFiles()[0].rsplit("/", 1)[0])
+    assert out.schema == inferred.schema
+    assert sorted(out.collect()) == sorted(df.collect())
